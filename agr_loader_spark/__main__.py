@@ -32,15 +32,14 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--n-buckets", type=int, default=32)
-    p.add_argument("--salt-buckets", type=int, default=16)
     p.add_argument("--stop-after", type=int, default=None,
                    help="crash-inject: stop after N segment commits")
     p.add_argument("--no-schema-changes", action="store_true")
-    p.add_argument("--sink", choices=["arrow", "jvm", "delta"], default="arrow",
+    p.add_argument("--sink", choices=["arrow", "delta"], default="arrow",
                    help="merge path: 2-stage Arrow state-colocated COW fold "
-                        "(default), pure-JVM join merge, or write-optimized "
-                        "merge-on-read delta sink (state never read during "
-                        "ingest; compacted after the last segment)")
+                        "(default), or write-optimized merge-on-read delta "
+                        "sink (state never read during ingest; compacted "
+                        "after the last segment)")
     p.add_argument("--pipeline", nargs="?", const="on", default="off",
                    choices=["off", "on", "auto"],
                    help="async fold overlap: prefetch the next segment's "
@@ -91,8 +90,7 @@ def main(argv: list[str] | None = None) -> int:
         spark, table_root, TOKENS_TABLE_COLUMNS, key=TOKENS_MERGE_KEY,
         n_buckets=args.n_buckets, if_not_exists=True,
     )
-    runner = ReplayRunner(spark, table, source_path=binlog,
-                          salt_buckets=args.salt_buckets, sink=args.sink,
+    runner = ReplayRunner(spark, table, source_path=binlog, sink=args.sink,
                           pipeline=pipeline_mode)
     t0 = time.monotonic()
     metrics = runner.run(stop_after=args.stop_after)

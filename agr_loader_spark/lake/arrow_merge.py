@@ -161,8 +161,8 @@ def make_bucket_fold(
             b_max_lsn = int(pdf[lsn_col].max())
             # exact re-delivery dedup: co-location guarantees all copies of a
             # (key, lsn) pair are in this group. The dropped count is exact
-            # and free here — it replaces the planning pass's doc_id-decoding
-            # approx_count_distinct (see ReplayRunner._plan fast mode).
+            # and free here, so the planning pass never decodes doc_id
+            # (see ReplayRunner._plan).
             n_before = len(pdf)
             pdf = pdf.drop_duplicates(subset=[key, lsn_col])
             n_dups = n_before - len(pdf)

@@ -600,10 +600,8 @@ class LakeTable:
                         n_rows: int | None = None) -> DataFrame:
         """Stage-1 of the arrow merge as a standalone frame: cast to the
         current schema, add the bucket column, repartition for the fold.
-        Used by the runner to PIPELINE the next micro-batch's scan+shuffle
-        under the current micro-batch's fold (persist + materialize on a
-        second thread; pure compute, no commit, so exactly-once is
-        untouched)."""
+        Used by ``merge_arrow`` / ``merge_delta`` when the caller passes
+        an unprepared changeset (the replay runner prepares its own)."""
         cur = self.columns()
         prepared = changes.select(
             *[F.col(c.name).cast(c.type).alias(c.name) for c in cur],
@@ -756,7 +754,8 @@ class LakeTable:
                 "n_upserts": n_upserts if exact_u is None else int(exact_u),
                 "n_deletes": n_deletes,
                 # actual touched set (buckets that received rows), not the
-                # caller's declared superset — fast-plan passes all buckets
+                # caller's declared superset — the replay runner declares
+                # all buckets
                 "buckets_touched": sorted(int(r["bucket"]) for r in manifests),
                 "per_bucket_offsets": per_bucket,
             }

@@ -13,12 +13,12 @@ Reference semantics being re-expressed (SURVEY.md A3/K3/K4):
   here exact (doc_id, event_lsn) re-deliveries are identical rows, so
   they collapse in the final dedup.
 
-Four implementations, all vectorized (no per-row Python, per the north
+Two implementations, both vectorized (no per-row Python, per the north
 rule). Null keys: rows with a null ``key`` are dropped (the caller
 routes schema events before LWW).
 
-- ``lww_reduce`` (DEFAULT, production path) — two-phase local/global
-  reduce that never sorts or aggregates the payload:
+- ``lww_reduce`` (DEFAULT for the entity merges) — two-phase
+  local/global reduce that never sorts or aggregates the payload:
     phase 1 (local):  per-map-task partial max(lsn) per key, then a
                       narrow global max — only (key, lsn) shuffles;
     phase 2 (global): left-semi join of the full rows against the
@@ -29,16 +29,14 @@ routes schema events before LWW).
   still spreads across all partitions (the lsn acts as a built-in salt
   for every payload shuffle); only the narrow pre-aggregated
   (key, max_lsn) pairs ever converge on one reducer. ~10x faster than
-  the struct-aggregation variants on token-array payloads (measured:
-  1.9s vs 18.4s on a 2M-event segment, local[32]).
-- ``lww_reduce_salted`` — explicit salted repartitioning + two-phase
-  max_by(struct) merge-apply (local per (key, salt), then global per
-  key). The BASELINE.json-named strategy, kept selectable and tested;
-  payload rides through the aggregation buffers, so prefer the default.
-- ``lww_reduce_pandas`` — the salted two-phase as grouped
-  ``applyInPandas`` Arrow UDFs (north-rule parity implementation).
+  a salted ``max_by(struct)`` aggregation on token-array payloads
+  (measured: 1.9s vs 18.4s on a 2M-event segment, local[32]).
 - ``lww_reduce_window`` — naive row_number() window; the readable spec.
   NOT skew-safe: a hot key sorts all its rows in one partition.
+
+The change-log replay does not use either: its two phases are
+``precombine_lww`` below (map-local) and the bucket fold
+(lake/arrow_merge.py, global).
 """
 
 from __future__ import annotations
@@ -60,7 +58,6 @@ def lww_reduce(
     df: DataFrame,
     key: str = "doc_id",
     order_col: str = "event_lsn",
-    salt_buckets: int = 16,  # unused here; kept for signature parity
 ) -> DataFrame:
     """Keep, per key, the full row of the max-``order_col`` event.
 
@@ -75,31 +72,6 @@ def lww_reduce(
     )
 
 
-def lww_reduce_salted(
-    df: DataFrame,
-    key: str = "doc_id",
-    order_col: str = "event_lsn",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Explicit salted two-phase merge-apply with max_by(struct).
-
-    Phase 1 reduces (key, salt) locally (Spark additionally pre-combines
-    map-side), phase 2 reduces per key; the salt bounds any single
-    reducer's group size under hot keys — the engine analog of the
-    reference's randomized provider-pair scheduling
-    (src/etl/orthology_etl.py:197-225).
-    """
-    cols = df.columns
-    payload = F.struct(*cols)
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets)))
-    local = salted.groupBy(key, "__salt").agg(
-        F.max_by(payload, F.col(order_col)).alias("__row"),
-        F.max(order_col).alias("__lsn"),
-    )
-    merged = local.groupBy(key).agg(F.max_by("__row", F.col("__lsn")).alias("__row"))
-    return merged.select("__row.*")
-
-
 def lww_reduce_window(df: DataFrame, key: str = "doc_id", order_col: str = "event_lsn") -> DataFrame:
     w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
     return (
@@ -107,29 +79,6 @@ def lww_reduce_window(df: DataFrame, key: str = "doc_id", order_col: str = "even
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def lww_reduce_pandas(
-    df: DataFrame,
-    key: str = "doc_id",
-    order_col: str = "event_lsn",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Salted two-phase LWW as grouped Arrow/pandas UDFs (applyInPandas).
-
-    Semantics identical to ``lww_reduce``; each phase receives the whole
-    (key[, salt]) group as one pandas frame and keeps idxmax(order_col).
-    """
-    schema = df.schema
-
-    def keep_last(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.loc[[pdf[order_col].idxmax()]]
-
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets)))
-    local = salted.groupBy(key, "__salt").applyInPandas(
-        lambda pdf: keep_last(pdf), schema=salted.schema
-    ).drop("__salt")
-    return local.groupBy(key).applyInPandas(keep_last, schema=schema)
 
 
 def dedup_exact(df: DataFrame, cols: Iterable[str] | None = None) -> DataFrame:

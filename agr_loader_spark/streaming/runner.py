@@ -8,13 +8,15 @@ stack (SURVEY.md §3.1): ordered ``etl_groups`` with hard barriers
 (src/transactors/csv_transactor.py:14-57) — all collapsed into a
 sequential epoch loop where each micro-batch is
 
-    read epoch -> dedup (doc_id, event_lsn) -> LWW reduce (salted
-    two-phase) -> plan changeset -> MERGE commit (exactly-once)
+    read segment -> plan changeset -> map-local LWW precombine ->
+    balanced bucket repartition -> bucket fold + commit (exactly-once)
 
-and job boundaries are the barriers. Epochs containing schema-change
-events are split at each S event's lsn so evolution applies at exactly
-its log position (a doc whose last pre-add update precedes the `add`
-must NOT get the added column backfilled).
+and job boundaries are the barriers. The precombine is the local phase
+and the bucket fold (lake/arrow_merge.py) the global phase of the
+two-phase LWW merge; re-deliveries collapse in both. Epochs containing
+schema-change events are split at each S event's lsn so evolution
+applies at exactly its log position (a doc whose last pre-add update
+precedes the `add` must NOT get the added column backfilled).
 
 Exactly-once/resume: every segment commit carries epoch_key
 ``"{epoch}:{segment}"`` recorded in the table manifest; re-running any
@@ -38,9 +40,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lake.table import OP_COL, LakeTable
-from ..operators.dedup import (MIN_LSN_COL, lww_reduce, lww_reduce_pandas,
-                               lww_reduce_salted)
+from ..lake.table import BUCKET_COL, OP_COL, LakeTable
+from ..operators.dedup import MIN_LSN_COL, precombine_lww
 from ..plans.merge import plan_changeset
 
 
@@ -51,10 +52,7 @@ class ReplayRunner:
         table: LakeTable,
         source_path: str | None = None,
         source_df: DataFrame | None = None,
-        salt_buckets: int = 16,
-        use_pandas_lww: bool = False,
-        use_salted_lww: bool = False,
-        sink: str = "arrow",  # "arrow" (2-stage state-colocated COW) | "jvm" | "delta" (write-optimized MOR)
+        sink: str = "arrow",  # "arrow" (2-stage state-colocated COW) | "delta" (write-optimized MOR)
         precombine: bool | None = None,  # arrow sink only: map-LOCAL LWW combine (operators/dedup.py:precombine_lww, Arrow-vectorized mapInArrow — NOT a groupBy agg; see its docstring for why) collapses each map partition to one winner row per key BEFORE the bucket shuffle, cutting shuffled/folded payload bytes by the feed's update multiplicity (zipf: most event volume is LWW losers) with zero added exchanges and bounded per-task memory. Exact dedup counters move to the narrow planning pass (_plan). None (default) = on for the arrow sink, and bench.py re-verifies the claim every run with an uncombined probe rep rather than freezing it here (the r4 JVM-agg combine's "faster everywhere" claim was falsified by exactly such a probe; BENCH/BASELINE.md round-4 precombine section).
         exact_counts: bool = False,  # precombine mode only: the map-local combine erases re-delivery multiplicity before the fold, so exact n_upserts / n_duplicates_dropped need a two-level distinct-lsn aggregation in the planning pass — a full extra pass over the segment (~60 core-s per 34M events, measured round 4) paid for a metrics counter. Default OFF: lineage carries n_upserts_approx / n_duplicates_dropped_approx from approx_count_distinct folded into the same narrow planning agg (no extra shuffle, one expression), plus the fold-exact applied-upsert count as n_upserts. Turn on for audits where distinct-event counts must be exact. Uncombined runs always have exact counters — the fold measures them for free.
         pipeline: bool | str = False,  # async fold overlap: prefetch the next segment's scan+shuffle (schema-aware) under the current fold. True/False, or "auto": measure both regimes on THIS run's early segments (ABBA: sync on applied segments 1+4, one overlap cycle on 2+3, the empty-table segment 0 excluded) and lock in the faster (the overlap win flips sign across hosts/topologies — r3 measured it +53% wall, the r4 host measured it faster; a frozen flag is wrong somewhere, so decide from live per-event rates instead)
@@ -67,10 +65,7 @@ class ReplayRunner:
         self.table = table
         self.source_path = source_path
         self.source_df = source_df
-        self.salt_buckets = salt_buckets
-        self.use_pandas_lww = use_pandas_lww
-        self.use_salted_lww = use_salted_lww
-        if sink not in ("arrow", "jvm", "delta"):
+        if sink not in ("arrow", "delta"):
             raise ValueError(f"unknown sink {sink!r}")
         self.sink = sink
         if pipeline not in (True, False, "auto"):
@@ -123,25 +118,17 @@ class ReplayRunner:
     # ------------------------------------------------------------------ replay
     def _plan(self, epochs: list[int] | None):
         """ONE planning pass for the whole replay: collect the (rare)
-        schema events, then compute per-segment stats — offsets, counts,
-        and (full mode only) dup estimate + touched buckets — in a
-        single grouped aggregation over the log. The replay loop then
-        runs exactly one Spark job per micro-batch (the merge write);
-        nothing else touches the cluster.
+        schema events, then compute per-segment stats — offsets, counts
+        and (precombined runs) re-delivery counters — in a single grouped
+        aggregation over the log. The replay loop then runs exactly one
+        Spark job per micro-batch (the merge write); nothing else touches
+        the cluster.
 
-        Fast mode (the default for the fold sinks): the stats scan
-        touches ONLY (epoch, event_lsn, op) — fixed-width ints plus a
-        1-char string. The full mode additionally decodes every doc_id
-        (the widest hot column after the payload) to hash out a dup
-        estimate and a touched-bucket set; both are superseded on the
-        fold sinks, which count dedup EXACTLY inside the bucket fold
-        and record the actual touched set from the fold manifests. At
-        10^10 events the doc_id decode is the planning pass's dominant
-        cost, so fast mode roughly halves it; the jvm join-merge sink
-        still needs the touched set up front and keeps the full scan."""
-        fast = self.sink in ("arrow", "delta") and (
-            os.environ.get("SPARK_GRAFT_FAST_PLAN", "1") != "0"
-        )
+        The stats scan touches ONLY (epoch, event_lsn, op) — fixed-width
+        ints plus a 1-char string; it never decodes doc_id (the widest
+        hot column after the payload). Dedup is counted EXACTLY inside
+        the bucket fold, and the fold manifests record the actual
+        touched-bucket set, so neither needs the key up front."""
         ev = self._events()
         if epochs is not None:
             ev = ev.filter(F.col("epoch").isin(epochs))
@@ -163,7 +150,8 @@ class ReplayRunner:
                 (F.col("epoch") == r["epoch"]) & (F.col("event_lsn") > r["event_lsn"]), 2
             ).otherwise(0)
         data = ev.filter(F.col("op") != "S")
-        if self.precombine and self.exact_counts:
+        exact = self.precombine and self.exact_counts
+        if exact:
             # the map-LOCAL combine (operators/dedup.py:precombine_lww)
             # collapses LWW losers before the fold ever sees them, so the
             # fold can no longer count re-deliveries. Measure them HERE,
@@ -189,10 +177,8 @@ class ReplayRunner:
                 F.max(
                     F.when(F.col("op") == "D", 1).otherwise(0)
                 ).alias("is_d"),  # copies of an lsn are identical events
-                *([] if fast else
-                  [F.min(self.table._bucket_expr(F.col("doc_id"))).alias("b1")]),
             )
-            aggs = [
+            stats_rows = lvl1.groupBy("epoch", "seg").agg(
                 F.sum("copies").alias("n_events"),
                 F.min("event_lsn").alias("min_lsn"),
                 F.max("event_lsn").alias("max_lsn"),
@@ -200,10 +186,7 @@ class ReplayRunner:
                 # changeset op mapping (plans/merge.py): everything
                 # non-delete becomes an upsert
                 F.sum(F.when(F.col("is_d") == 0, 1).otherwise(0)).alias("n_unique_u"),
-            ]
-            if not fast:
-                aggs.append(F.collect_set("b1").alias("buckets"))
-            stats_rows = lvl1.groupBy("epoch", "seg").agg(*aggs).collect()
+            ).collect()
         else:
             aggs = [
                 F.count("*").alias("n_events"),
@@ -216,8 +199,7 @@ class ReplayRunner:
                 # so approximate it here. An lsn names one event, so
                 # distinct-lsn needs no doc_id decode — these two extra
                 # expressions ride the same narrow segment-stats partial
-                # aggregation (HLL sketch buffers, no extra shuffle),
-                # compatible with fast-plan's 3-column scan.
+                # aggregation (HLL sketch buffers, no extra shuffle).
                 # rsd 0.02 default: the dup estimate is n_events -
                 # distinct_estimate, so its absolute error is
                 # rsd * n_events — at typical re-delivery rates (<1%)
@@ -239,31 +221,17 @@ class ReplayRunner:
                         F.when(F.col("op") != "D", F.col("event_lsn")), rsd
                     ).alias("n_unique_u_approx"),
                 ]
-            if not fast:
-                aggs += [
-                    # metrics-only: approx avoids a full (doc, lsn) dedup
-                    # shuffle; hash the pair instead of building a string
-                    F.approx_count_distinct(
-                        F.xxhash64("doc_id", "event_lsn")
-                    ).alias("n_unique"),
-                    F.collect_set(self.table._bucket_expr(F.col("doc_id"))).alias("buckets"),
-                ]
             stats_rows = data.groupBy("epoch", seg_expr.alias("seg")).agg(*aggs).collect()
-        exact = self.precombine and self.exact_counts
+        approx = self.precombine and not exact
         stats = {
             (r["epoch"], r["seg"]): {
                 "n_events": r["n_events"],
                 "min_lsn": r["min_lsn"],
                 "max_lsn": r["max_lsn"],
-                "n_unique": r["n_unique"] if (exact or not fast) else None,
+                "n_unique": r["n_unique"] if exact else None,
                 "n_unique_u": r["n_unique_u"] if exact else None,
-                "n_unique_approx": (
-                    r["n_unique_approx"] if self.precombine and not exact else None
-                ),
-                "n_unique_u_approx": (
-                    r["n_unique_u_approx"] if self.precombine and not exact else None
-                ),
-                "buckets": None if fast else r["buckets"],
+                "n_unique_approx": r["n_unique_approx"] if approx else None,
+                "n_unique_u_approx": r["n_unique_u_approx"] if approx else None,
             }
             for r in stats_rows
         }
@@ -287,16 +255,8 @@ class ReplayRunner:
                     lo = b
         return ops
 
-    def _segment_events(self, epoch: int, lo, hi) -> DataFrame:
-        cond = (F.col("epoch") == epoch) & (F.col("op") != "S")
-        if lo is not None:
-            cond = cond & (F.col("event_lsn") > lo)
-        if hi is not None:
-            cond = cond & (F.col("event_lsn") < hi)
-        return self._events().filter(cond)
-
     def _changeset_base(self, columns=None) -> DataFrame:
-        """The segment-independent prefix of the arrow-sink plan —
+        """The segment-independent prefix of the fold plan —
         scan -> changeset projection -> schema cast -> bucket column —
         built ONCE per table schema version and cached. Per segment only
         a 3-predicate filter + the fold repartition go on top (~10 py4j
@@ -312,8 +272,6 @@ class ReplayRunner:
             cached = getattr(self, "_base_cache", None)
             if cached is not None and cached[0] == sv:
                 return cached[1]
-        from ..lake.table import BUCKET_COL
-
         cur = columns if columns is not None else self.table.columns()
         data = self._events().filter(F.col("op") != "S")
         changes = plan_changeset(data, self.table, keep_cols=["event_lsn", "epoch"],
@@ -334,41 +292,33 @@ class ReplayRunner:
         filter sits BELOW the repartition by construction, so the
         epoch-partition pruning still reaches the scan and the shuffle
         carries only this segment's rows."""
-        base = self._changeset_base(columns=columns)
         cond = F.col("epoch") == epoch
         if lo is not None:
             cond = cond & (F.col("event_lsn") > lo)
         if hi is not None:
             cond = cond & (F.col("event_lsn") < hi)
-        seg = base.filter(cond).drop("epoch")
+        seg = self._changeset_base(columns).filter(cond).drop("epoch")
         if self.precombine:
-            from ..operators.dedup import precombine_lww
-
             seg = precombine_lww(seg, key=self.table.key, op_col=OP_COL,
                                  lsn_col="event_lsn")
         return self.table.balanced_fold_repartition(seg, n_touched, n_rows)
 
     def _touched(self, st) -> list[int]:
-        """Touched-bucket set for a segment's stats row: the exact set in
-        full-plan mode, ALL buckets in fast mode (the fold manifests then
-        record the actual set; an undeclared bucket with no rows forms no
-        group, so its state files carry forward untouched either way)."""
-        if st is None:
-            return []
-        if st.get("buckets") is not None:
-            return list(st["buckets"])
-        return list(range(self.table.n_buckets))
+        """Declared touched-bucket set for a segment: ALL buckets when the
+        segment has rows (the fold manifests then record the actual set;
+        an undeclared bucket with no rows forms no group, so its state
+        files carry forward untouched), none for an empty segment."""
+        return [] if st is None else list(range(self.table.n_buckets))
 
     def _n_touched(self, st) -> int:
-        """Fold-granularity estimate for a segment: len(_touched), but in
-        fast-plan mode capped by the segment's row count — a sparse
-        segment cannot touch more buckets than it has rows, and without
-        the cap every tiny segment would get n_buckets fold partitions
-        (mostly empty Arrow round-trips)."""
-        touched = self._touched(st)
-        if st is not None and st.get("buckets") is None and st.get("n_events"):
-            return min(len(touched), int(st["n_events"]))
-        return len(touched)
+        """Fold-granularity estimate for a segment: len(_touched), capped
+        by the segment's row count — a sparse segment cannot touch more
+        buckets than it has rows, and without the cap every tiny segment
+        would get n_buckets fold partitions (mostly empty Arrow
+        round-trips)."""
+        if st is None:
+            return 0
+        return min(self.table.n_buckets, int(st["n_events"]))
 
     @staticmethod
     def _future_cols(cols, sc) -> list:
@@ -485,28 +435,22 @@ class ReplayRunner:
         all_metrics: list[dict] = pruned_records
         committed = 0
         futures: dict[tuple[int, int], cf.Future] = {}
-        pool = cf.ThreadPoolExecutor(max_workers=1) if (
-            self.pipeline and self.sink in ("arrow", "delta")
-        ) else None
+        pool = cf.ThreadPoolExecutor(max_workers=1) if self.pipeline else None
         # pipeline="auto": probe both regimes on the replay's own early
         # segments, then lock the faster. Probe design (ABBA, seg-0
         # excluded): the FIRST applied data segment folds into an empty
-        # table and is structurally faster per event (no state read —
-        # tools/diag_seg0.py quantifies it), so it belongs to NEITHER
-        # bucket; segments 1 and 4 apply synchronously (A), segments 2-3
-        # run one full overlap cycle (segment 2 pays the concurrent
-        # prefetch, segment 3 consumes it) (B). Bracketing sync around
-        # overlap cancels the monotone state-growth drift that a
-        # sync-first/overlap-second split would attribute to the regime.
+        # table and is structurally faster per event (no state read),
+        # so it belongs to NEITHER bucket; segments 1 and 4 apply
+        # synchronously (A), segments 2-3 run one full overlap cycle
+        # (segment 2 pays the concurrent prefetch, segment 3 consumes
+        # it) (B). Bracketing sync around overlap cancels the monotone
+        # state-growth drift that a sync-first/overlap-second split would
+        # attribute to the regime.
         # At production commit intervals (>=100M events/segment) the
         # probe is a vanishing prefix; on short logs the decision barely
-        # matters. overlap_on: None = still probing. A sink with no
-        # prefetch pool (jvm) has nothing to probe: auto resolves off.
-        auto = self.pipeline == "auto" and pool is not None
-        if self.pipeline == "auto":
-            overlap_on: bool | None = None if pool is not None else False
-        else:
-            overlap_on = bool(self.pipeline)
+        # matters. overlap_on: None = still probing.
+        auto = self.pipeline == "auto"
+        overlap_on: bool | None = None if auto else bool(self.pipeline)
         probe = {"sync": [0.0, 0], "overlap": [0.0, 0]}
         applied_data = 0
         try:
@@ -668,60 +612,28 @@ class ReplayRunner:
             lineage["n_duplicates_dropped_approx"] = max(
                 0, n_events - int(stats["n_unique_approx"])
             )
-        elif stats is not None and stats.get("n_unique") is not None:
-            # full-plan mode only; fold sinks record the EXACT count as
-            # n_duplicates_dropped from the fold manifests instead
-            lineage["n_duplicates_dropped_approx"] = max(
-                0, n_events - int(stats["n_unique"])
-            )
+        prefetched = prepared is not None
+        if not prefetched:
+            prepared = self._segment_prepared(epoch, lo, hi, self._n_touched(stats),
+                                              n_events or None)
         touched = self._touched(stats)
         if self.sink == "delta":
             # MOR: same prepared stage-1; the fold appends delta files
             # without ever reading bucket state
-            if prepared is None:
-                prepared = self._segment_prepared(epoch, lo, hi,
-                                                  self._n_touched(stats),
-                                                  n_events or None)
             result = self.table.merge_delta(
                 prepared, epoch_key=epoch_key, lsn_col="event_lsn",
                 lineage=lineage, touched_buckets=touched, prepared=True,
             )
-            if hasattr(prepared, "unpersist"):
-                prepared.unpersist()
-        elif self.sink == "arrow":
-            # LWW + re-delivery dedup happen inside the bucket fold; the
-            # JVM side is scan -> project -> one shuffle
-            if prepared is not None:
-                result = self.table.merge_arrow(
-                    prepared, epoch_key=epoch_key, lsn_col="event_lsn",
-                    lineage=lineage, touched_buckets=touched, prepared=True,
-                    precombined=self.precombine,
-                )
-                prepared.unpersist()
-            else:
-                seg_df = self._segment_prepared(epoch, lo, hi,
-                                                self._n_touched(stats),
-                                                n_events or None)
-                result = self.table.merge_arrow(
-                    seg_df, epoch_key=epoch_key, lsn_col="event_lsn",
-                    lineage=lineage, touched_buckets=touched, prepared=True,
-                    precombined=self.precombine,
-                )
         else:
-            events = self._segment_events(epoch, lo, hi)
-            if self.use_pandas_lww:
-                reducer = lww_reduce_pandas
-            elif self.use_salted_lww:
-                reducer = lww_reduce_salted
-            else:
-                reducer = lww_reduce  # semi-join path; collapses re-deliveries
-            latest = reducer(events, key="doc_id", order_col="event_lsn",
-                             salt_buckets=self.salt_buckets)
-            changes = plan_changeset(latest, self.table)
-            result = self.table.merge(
-                changes, epoch_key=epoch_key, lineage=lineage,
-                touched_buckets=touched,
+            # LWW + re-delivery dedup happen inside the bucket fold; the
+            # JVM side is scan -> project -> precombine -> one shuffle
+            result = self.table.merge_arrow(
+                prepared, epoch_key=epoch_key, lsn_col="event_lsn",
+                lineage=lineage, touched_buckets=touched, prepared=True,
+                precombined=self.precombine,
             )
+        if prefetched:
+            prepared.unpersist()  # the prefetch persisted it DISK_ONLY
         result["seconds"] = round(time.monotonic() - t0, 4)
         self._emit(result)
         return result

@@ -34,7 +34,7 @@ def test_fk_guard_uses_broadcast_semi_join(spark):
     assert "LeftSemi" in plan and "Broadcast" in plan
 
 
-def test_replay_merge_plan_has_no_python_in_jvm_sink(spark, tmproot):
+def test_lww_reduce_changeset_plan_has_no_python(spark, tmproot):
     from agr_loader_spark.lake.table import LakeTable
     from agr_loader_spark.operators.dedup import lww_reduce
     from agr_loader_spark.plans.merge import plan_changeset

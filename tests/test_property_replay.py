@@ -51,7 +51,7 @@ def _oracle(log):
     return state
 
 
-@pytest.mark.parametrize("sink", ["arrow", "jvm"])
+@pytest.mark.parametrize("sink", ["arrow", "delta"])
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(log=log_st, dup_mask=dup_mask_st, epoch_size=st.sampled_from([3, 7, 50]))

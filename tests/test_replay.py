@@ -63,7 +63,7 @@ def _assert_state_equals_oracle(table, oracle_df):
 
 
 @pytest.mark.parametrize("sink,pipeline", [("arrow", False), ("arrow", True),
-                                           ("arrow", "auto"), ("jvm", False)])
+                                           ("arrow", "auto")])
 def test_replay_matches_oracle(spark, tmproot, binlog, oracle_df, sink, pipeline):
     """pipeline=True exercises the schema-aware async prefetch: every
     prepared segment is planned under a SIMULATED future schema and must
@@ -97,8 +97,8 @@ def test_replay_matches_oracle(spark, tmproot, binlog, oracle_df, sink, pipeline
     lineage = table.lineage()
     data_keys = {m["epoch_key"] for m in metrics if "n_upserts" in m and not m.get("skipped")}
     assert data_keys == {l["epoch_key"] for l in lineage if "n_upserts" in l}
-    # duplicates were present and dropped: fold sinks count EXACTLY in
-    # the bucket fold (fast plan), the jvm sink estimates in planning
+    # duplicates were present and dropped: counted exactly by the bucket
+    # fold, or estimated in planning when precombined
     assert sum(
         l.get("n_duplicates_dropped", l.get("n_duplicates_dropped_approx", 0)) or 0
         for l in lineage
@@ -116,6 +116,22 @@ def test_replay_matches_oracle(spark, tmproot, binlog, oracle_df, sink, pipeline
         assert set(pb) == {str(b) for b in l["buckets_touched"]}
         for ofs in pb.values():
             assert l["min_lsn"] <= ofs["min_lsn"] <= ofs["max_lsn"] <= l["max_lsn"]
+
+
+def test_removed_replay_options_are_rejected(spark, tmproot, binlog):
+    """One copy-on-write path plus the MOR delta sink: the jvm sink and
+    its alternative LWW reducers are gone, on the CLI too."""
+    from agr_loader_spark.__main__ import main
+
+    table = _fresh_table(spark, tmproot)
+    with pytest.raises(ValueError):
+        ReplayRunner(spark, table, source_path=binlog, sink="jvm")
+    for gone in ("use_pandas_lww", "use_salted_lww", "salt_buckets"):
+        with pytest.raises(TypeError):
+            ReplayRunner(spark, table, source_path=binlog, **{gone: True})
+    with pytest.raises(SystemExit) as exc:
+        main(["--workdir", tmproot + "/cli", "--sink", "jvm"])
+    assert exc.value.code == 2  # argparse usage error, before any Spark work
 
 
 def test_resume_from_checkpoint_mid_stream(spark, tmproot, binlog, oracle_df):
@@ -321,20 +337,6 @@ def test_precombine_exact_dups_across_partitions(spark, tmproot):
     assert got == {"d1": [9, 9], "d2": [7]}
 
 
-def test_pandas_lww_path_equivalent(spark, tmproot, binlog, oracle_df):
-    table = _fresh_table(spark, tmproot)
-    ReplayRunner(spark, table, source_path=binlog, use_pandas_lww=True,
-                 sink="jvm").run()
-    _assert_state_equals_oracle(table, oracle_df)
-
-
-def test_salted_lww_path_equivalent(spark, tmproot, binlog, oracle_df):
-    table = _fresh_table(spark, tmproot)
-    ReplayRunner(spark, table, source_path=binlog, use_salted_lww=True,
-                 sink="jvm").run()
-    _assert_state_equals_oracle(table, oracle_df)
-
-
 def test_generator_determinism_and_skew(spark, binlog):
     df1 = spark.read.parquet(binlog)
     df2 = generate_binlog(spark, n_events=N_EVENTS, n_docs=N_DOCS, epoch_size=EPOCH,
@@ -370,10 +372,10 @@ def test_metrics_df_is_queryable(spark, tmproot, binlog, oracle_df):
 def test_empty_segment_noops_with_zero_jobs_in_fast_plan(spark, tmproot):
     """An EMPTY data segment (two consecutive schema events with no data
     between their lsns) must commit as a merge-noop with ZERO Spark jobs
-    under the default fast planning mode (r4 verdict item 6): the narrow
-    (epoch, lsn, op) planning scan already knows n_rows==0 — no stats
-    group forms — so the runner hands merge an empty touched set and the
-    noop short-circuit fires before any fold task is scheduled."""
+    (r4 verdict item 6): the narrow (epoch, lsn, op) planning scan
+    already knows n_rows==0 — no stats group forms — so the runner hands
+    merge an empty touched set and the noop short-circuit fires before
+    any fold task is scheduled."""
     from agr_loader_spark.schema import SCHEMA_CHANGE_TYPE
 
     sc_widen = {"kind": "widen", "column": "n_tok", "new_name": None,

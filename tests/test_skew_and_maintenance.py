@@ -7,6 +7,8 @@ from agr_loader_spark.lake.table import LakeTable
 from agr_loader_spark.schema import TOKENS_MERGE_KEY, TOKENS_TABLE_COLUMNS
 from agr_loader_spark.streaming.runner import ReplayRunner
 
+from .replay_oracle import oracle_fold
+
 
 def _table(spark, root, n_buckets=8):
     return LakeTable.create(spark, root, TOKENS_TABLE_COLUMNS,
@@ -15,7 +17,9 @@ def _table(spark, root, n_buckets=8):
 
 def test_extreme_hot_key_replay_correct(spark, tmproot):
     """One doc_id carries ~60% of all events (far past the F2 dial);
-    every LWW path and both sinks must still produce the exact fold."""
+    both sinks must still produce the exact oracle fold — the precombine
+    (local) + bucket fold (global) two-phase merge under pathological
+    skew."""
     log = generate_binlog(spark, n_events=8000, n_docs=5, zipf_s=2.0,
                           epoch_size=2000, seed=13, with_schema_changes=False)
     top_share = (
@@ -23,19 +27,20 @@ def test_extreme_hot_key_replay_correct(spark, tmproot):
     )
     assert top_share > 0.5  # genuinely pathological
 
-    results = {}
-    for name, kwargs in {
-        "arrow": dict(sink="arrow"),
-        "jvm_semi": dict(sink="jvm"),
-        "jvm_salted": dict(sink="jvm", use_salted_lww=True),
-    }.items():
-        t = _table(spark, f"{tmproot}/{name}")
-        ReplayRunner(spark, t, source_df=log, **kwargs).run()
-        results[name] = {
-            r["doc_id"]: (r["n_tok"], list(r["tokens"])) for r in t.read().collect()
+    exp = oracle_fold(log.toPandas())
+    expected = {
+        d: (int(n), list(t), s)
+        for d, n, t, s in zip(exp["doc_id"], exp["n_tok"], exp["tokens"], exp["source"])
+    }
+    assert 0 < len(expected) <= 5
+    for sink in ("arrow", "delta"):
+        t = _table(spark, f"{tmproot}/{sink}")
+        ReplayRunner(spark, t, source_df=log, sink=sink).run()
+        got = {
+            r["doc_id"]: (r["n_tok"], list(r["tokens"]), r["source"])
+            for r in t.read().collect()
         }
-    assert results["arrow"] == results["jvm_semi"] == results["jvm_salted"]
-    assert len(results["arrow"]) <= 5
+        assert got == expected, sink
 
 
 def test_expire_snapshots(spark, tmproot):

@@ -301,7 +301,7 @@ def main() -> int:
     ap.add_argument("--max-attempts", type=int, default=12)
     ap.add_argument("--exec-opts", default="")
     ap.add_argument("--storage", choices=["disk", "shm"], default="disk")
-    ap.add_argument("--sink", choices=["arrow", "jvm", "delta"], default="arrow")
+    ap.add_argument("--sink", choices=["arrow", "delta"], default="arrow")
     ap.add_argument("--log", default="binlog48", dest="log_name",
                     help="binlog dir name under the storage root (e.g. "
                          "binlog96: 96M events, same 5 schema events — "

@@ -127,10 +127,10 @@ def worker(e: int, log: str, table_path: str, ctl: str) -> int:
     # pair 3): a fixed-size warmup splits across e executors, so each
     # 4-exec JVM entered segment 0 ~4x colder (JIT) than the 1-exec JVM
     # — measured as the segment-0 efficiency dip in pairs 1-2 (0.499 vs
-    # 0.78-1.04 on steady-state segments) and confirmed by the
-    # tools/diag_seg0.py warmup A/B. Production executors are
-    # long-lived; per-JVM-equal warmup removes the measurement artifact
-    # without touching anything timed.
+    # 0.78-1.04 on steady-state segments) and confirmed by a segment-0
+    # warmup A/B. Production executors are long-lived; per-JVM-equal
+    # warmup removes the measurement artifact without touching anything
+    # timed.
     import tempfile
 
     we = 400_000 * e
@@ -144,8 +144,7 @@ def worker(e: int, log: str, table_path: str, ctl: str) -> int:
 
     table = LakeTable.create(spark, table_path, TOKENS_TABLE_COLUMNS,
                              key=TOKENS_MERGE_KEY, n_buckets=64)
-    runner = ReplayRunner(spark, table, source_path=log, salt_buckets=16,
-                          sink="arrow", pipeline=False)
+    runner = ReplayRunner(spark, table, source_path=log, sink="arrow")
     planobj = runner.plan()  # untimed by design — see module docstring
     open(os.path.join(ctl, f"ready_{e}"), "w").close()
 
